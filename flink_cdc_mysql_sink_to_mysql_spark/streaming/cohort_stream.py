@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import cdc, cohort
-from .pipeline import envelope_stream
+from .pipeline import envelope_stream, run_available_now
 
 
 def cohort_stats_stream(
@@ -62,14 +62,9 @@ def cohort_stats_stream(
             "append"
         ).parquet(delta_dir)
 
-    q = (
-        stats.writeStream.outputMode("update")
-        .foreachBatch(_append)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stats.writeStream.outputMode("update").foreachBatch(_append), ckpt
     )
-    q.awaitTermination()
     return delta_dir
 
 
@@ -284,14 +279,9 @@ def run_dynamic_cohorts(
             _snapshot(eid)
         seen.append(eid)
 
-    q = (
-        cube.writeStream.outputMode("update")
-        .foreachBatch(_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        cube.writeStream.outputMode("update").foreachBatch(_batch), ckpt
     )
-    q.awaitTermination()
     # the DRAINED state always gets a snapshot (snapshot_every thinning
     # must not leave the final memberships stale)
     if seen and not os.path.isdir(

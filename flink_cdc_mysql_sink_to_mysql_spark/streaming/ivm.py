@@ -13,12 +13,15 @@ Design (the exactly-once shape that needs NO retraction arithmetic):
 
 1. the micro-batch merges into the LWW state sink as usual;
 2. the batch's touched conversations are recomputed FROM the
-   post-merge state (bucket-pruned read — work ∝ batch footprint, not
-   table size), producing each touched conv's complete, correct window
-   rows;
+   post-merge state (``MergeParquetSink.live_rows``: a bucket-pruned
+   read — work ∝ batch footprint, not table size), producing each
+   touched conv's complete, correct window rows;
 3. a grouped-replace commit swaps those convs' rows in the window
-   table (delete-all-rows-of-key ∪ insert-recomputed), epoch-skipped
-   like the state sink.
+   table (delete-all-rows-of-key ∪ insert-recomputed). It commits
+   through the state sink's own commit protocol
+   (``MergeParquetSink._commit``: epoch skip, table-owned n_buckets,
+   manifest swap, lineage), so both tables share one exactly-once
+   argument.
 
 Recompute-from-state makes every epoch idempotent by construction: a
 replay re-reads the same committed state and re-derives byte-identical
@@ -36,26 +39,20 @@ window table is bucketed on conv_id exactly like the state table.
 
 from __future__ import annotations
 
-import json
-import os
-import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sink import LINEAGE, MergeParquetSink
+from .sink import MergeParquetSink, bucket_of
 
 
 @dataclass
 class GroupedReplaceParquetSink(MergeParquetSink):
-    """Keyed table with replace-by-group commits (same manifest /
-    bucket / epoch-skip machinery as the MERGE sink; rows of one key
-    always live in the key's hash bucket).
-
-    ``replace_groups(keys, rows, epoch)``: atomically replace ALL rows
-    of the given keys with the given rows (callers pass rows only for
-    those keys — a key with no rows is a full delete).
+    """Keyed table with replace-by-group commits (the MERGE sink's
+    commit protocol; rows of one key always live in the key's hash
+    bucket).
 
     ``schema_ddl`` fixes the table's row type (reads of an empty /
     partial table need it); the default is the tumbling-window view.
@@ -75,65 +72,38 @@ class GroupedReplaceParquetSink(MergeParquetSink):
     def replace_groups(
         self, keys: DataFrame, rows: DataFrame, epoch_id: int
     ) -> dict:
+        """Atomically replace ALL rows of the keys in ``keys`` (a
+        ``conv_id`` column) with ``rows`` (the view's row type without
+        ``bucket``; rows only for those keys — a key with no rows is a
+        full delete), as epoch ``epoch_id`` through the same commit
+        protocol as :meth:`merge_changelog`. Returns the lineage record
+        {epoch, buckets, wall_s}, or {epoch, skipped: True} for an
+        already-committed epoch."""
         spark = rows.sparkSession
-        t0 = time.time()
-        manifest = self._load_manifest()
-        if epoch_id in manifest["epochs"]:
-            return {"epoch": epoch_id, "skipped": True}
-        stored = manifest.get("n_buckets")
-        if stored is not None and stored != self.n_buckets:
-            self.n_buckets = stored
-        manifest["n_buckets"] = self.n_buckets
 
-        bucket_of = F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast(
-            "int"
-        )
-        keys = keys.select("conv_id").distinct().cache()
-        # touched buckets come from the KEYS (a key whose recompute is
-        # empty still purges its old rows)
-        touched = [
-            r["b"] for r in keys.select(bucket_of.alias("b")).distinct().collect()
-        ]
-        delta = rows.withColumn("bucket", bucket_of)
+        @contextmanager
+        def build(manifest):
+            bucket = bucket_of(self.n_buckets)
+            keyset = keys.select("conv_id").distinct().cache()
+            try:
+                # touched buckets come from the KEYS (a key whose
+                # recompute is empty still purges its old rows)
+                touched = sorted(
+                    r["b"]
+                    for r in keyset.select(bucket.alias("b")).distinct().collect()
+                )
+                current = self._read_buckets(spark, manifest, touched)
+                out = current.join(
+                    F.broadcast(keyset), "conv_id", "left_anti"
+                ).unionByName(rows.withColumn("bucket", bucket))
+                yield out, touched, lambda _version, _written: {
+                    "epoch": int(epoch_id),
+                    "buckets": touched,
+                }
+            finally:
+                keyset.unpersist()
 
-        current = self._read_buckets(spark, touched)
-        if current is None:
-            out = delta
-        else:
-            out = current.join(
-                F.broadcast(keys), "conv_id", "left_anti"
-            ).unionByName(delta)
-
-        new_version = manifest["version"] + 1
-        verdir = f"v{new_version}-{epoch_id}"
-        out.withColumn("pb", F.col("bucket")).repartition("pb").write.partitionBy(
-            "pb"
-        ).mode("overwrite").parquet(os.path.join(self.root, verdir))
-        # a bucket can end up empty (all its keys' windows deleted):
-        # it must leave the manifest, not point at a missing pb= dir
-        written = {
-            name.split("=", 1)[1]
-            for name in os.listdir(os.path.join(self.root, verdir))
-            if name.startswith("pb=")
-        }
-        for b in touched:
-            if str(b) in written:
-                manifest["buckets"][str(b)] = f"{verdir}/pb={b}"
-            else:
-                manifest["buckets"].pop(str(b), None)
-        keys.unpersist()
-
-        manifest["version"] = new_version
-        manifest["epochs"] = sorted(set(manifest["epochs"]) | {epoch_id})[-1000:]
-        self._commit_manifest(manifest)
-        lineage = {
-            "epoch": int(epoch_id),
-            "buckets": [int(b) for b in sorted(touched)],
-            "wall_s": round(time.time() - t0, 3),
-        }
-        with open(os.path.join(self.root, LINEAGE), "a") as f:
-            f.write(json.dumps(lineage) + "\n")
-        return lineage
+        return self._commit(spark, epoch_id, str(epoch_id), build)
 
     def read_view(self, spark: SparkSession) -> DataFrame:
         """Current window rows (no tombstones exist in this table)."""
@@ -165,14 +135,6 @@ def _window_rows(live: DataFrame, window: str, slide: str | None = None) -> Data
     )
 
 
-def _tumbling_rows(live: DataFrame, window: str) -> DataFrame:
-    return _window_rows(live, window)
-
-
-def _sliding_rows(live: DataFrame, window: str, slide: str) -> DataFrame:
-    return _window_rows(live, window, slide)
-
-
 def sliding_state_batch(
     envelopes: DataFrame,
     window: str = "10 minutes",
@@ -181,7 +143,7 @@ def sliding_state_batch(
     """Batch twin / oracle for :func:`sliding_state_stream`."""
     from ..operators.cdc import apply_changelog
 
-    return _sliding_rows(apply_changelog(envelopes), window, slide)
+    return _window_rows(apply_changelog(envelopes), window, slide)
 
 
 def _session_rows(live: DataFrame, gap: str) -> DataFrame:
@@ -230,7 +192,7 @@ def maintained_view_stream(
     converges (module doc). ``recompute`` may be ANY per-conv-complete
     aggregation — tumbling windows and turn-gap sessions ship below.
     """
-    from .pipeline import envelope_stream
+    from .pipeline import envelope_stream, run_available_now
 
     env = envelope_stream(spark, spool_dir, max_files_per_trigger)
 
@@ -247,37 +209,13 @@ def maintained_view_stream(
                 .where(F.col("conv_id").isNotNull())
                 .distinct()
             ).cache()
-            buckets = [
-                r["b"]
-                for r in keys.select(
-                    F.pmod(
-                        F.xxhash64("conv_id"), F.lit(state_sink.n_buckets)
-                    )
-                    .cast("int")
-                    .alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            state = state_sink._read_buckets(spark, buckets)
-            live = (
-                state.where(F.col("op") != "d")
-                if state is not None
-                else spark.createDataFrame([], state_sink._SCHEMA)
-            )
-            rows = recompute(live.join(F.broadcast(keys), "conv_id"))
+            rows = recompute(state_sink.live_rows(keys))
             view_sink.replace_groups(keys, rows, epoch_id)
             keys.unpersist()
         finally:
             df.unpersist()
 
-    q = (
-        env.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(env.writeStream.foreachBatch(_batch), checkpoint_dir)
     return view_sink
 
 
@@ -297,7 +235,7 @@ def windowed_state_stream(
         state_sink,
         window_sink,
         checkpoint_dir,
-        recompute=lambda live: _tumbling_rows(live, window),
+        recompute=lambda live: _window_rows(live, window),
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -323,7 +261,7 @@ def sliding_state_stream(
         state_sink,
         window_sink,
         checkpoint_dir,
-        recompute=lambda live: _sliding_rows(live, window, slide),
+        recompute=lambda live: _window_rows(live, window, slide),
         max_files_per_trigger=max_files_per_trigger,
     )
 

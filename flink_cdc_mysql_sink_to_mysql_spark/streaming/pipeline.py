@@ -12,7 +12,10 @@ Structured Streaming:
 Checkpointing: `checkpointLocation` persists source offsets + commit
 log — the analog of Flink's enableCheckpointing(3000) (`:61`); restart
 resumes from the last committed microbatch, and the MERGE sink's
-idempotence makes the overlap harmless (exactly-once effective).
+idempotence makes the overlap harmless (exactly-once effective). Every
+bounded replay in the package starts through :func:`run_available_now`,
+the one driver that owns the checkpoint, the AvailableNow trigger and
+the lineage listener; each caller keeps only its small per-epoch body.
 
 Rate control: `maxFilesPerTrigger` stands in for the reference's
 batch-size/flush-interval knobs (`:84-85`).
@@ -181,6 +184,30 @@ class LineageListener(StreamingQueryListener):
         pass
 
 
+def run_available_now(writer, checkpoint_dir: str, lineage_path: str | None = None):
+    """Run one configured ``DataStreamWriter`` (foreachBatch body or
+    sink format + output mode already set) as a bounded replay: start it
+    under ``checkpoint_dir`` with Trigger.AvailableNow and block until
+    the backlog drains. Re-running with the same checkpoint resumes at
+    the committed offset. With ``lineage_path`` a
+    :class:`LineageListener` records every micro-batch's progress for
+    the query's lifetime."""
+    streams = SparkSession.active().streams
+    listener = LineageListener(lineage_path) if lineage_path else None
+    if listener is not None:
+        streams.addListener(listener)
+    try:
+        q = (
+            writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if listener is not None:
+            streams.removeListener(listener)
+
+
 def materialize_stream(
     spark: SparkSession,
     spool_dir: str,
@@ -285,21 +312,9 @@ def materialize_stream(
         finally:
             df.unpersist()
 
-    listener = None
-    if lineage_path:
-        listener = LineageListener(lineage_path)
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            env.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
+    run_available_now(
+        env.writeStream.foreachBatch(_batch), checkpoint_dir, lineage_path
+    )
     return sink
 
 
@@ -410,21 +425,11 @@ def materialize_stream_from_json(
         finally:
             df.unpersist()
 
-    listener = None
-    if lineage_path:
-        listener = LineageListener(lineage_path)
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(_merge_with_dlq)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
+    run_available_now(
+        parsed.writeStream.foreachBatch(_merge_with_dlq),
+        checkpoint_dir,
+        lineage_path,
+    )
     return sink
 
 
@@ -581,15 +586,12 @@ def windowed_counts_stream(
             "n_turns",
         )
     )
-    q = (
+    run_available_now(
         agg.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return out_dir
 
 
@@ -650,15 +652,12 @@ def stream_stream_join(
         "a_role",
         (F.unix_millis("a_ts") - F.unix_millis("u_ts")).alias("latency_ms"),
     )
-    q = (
+    run_available_now(
         joined.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return out_dir
 
 
@@ -698,15 +697,12 @@ def session_windows_stream(
             "last_turn",
         )
     )
-    q = (
+    run_available_now(
         agg.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return out_dir
 
 

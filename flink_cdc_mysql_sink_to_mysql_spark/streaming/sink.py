@@ -65,6 +65,7 @@ import re
 import shutil
 import tempfile
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,6 +80,11 @@ LINEAGE = "_lineage.jsonl"
 # is the merge epoch id or "compact"; vacuum only ever touches names
 # matching this (the manifest/lineage files never do)
 _VERDIR_RE = re.compile(r"^v\d+-")
+
+
+def bucket_of(n_buckets: int):
+    """The bucket id of a row: pmod(xxhash64(conv_id), n_buckets)."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
 # Spark DDL synonym → simpleString() spelling, for canonicalizing type
@@ -306,6 +312,101 @@ class MergeParquetSink:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path())  # atomic snapshot swap
 
+    def _commit(
+        self, spark: SparkSession, epoch_id: int | None, tag: str, build
+    ) -> dict:
+        """The one commit protocol of every bucketed table (MERGE,
+        grouped replace, compaction), so its exactly-once argument is
+        made once: 1. load the manifest; 2. skip an already-recorded
+        epoch (``epoch_id=None`` records none); 3. adopt the table-owned
+        n_buckets and extra_fields — before ``build`` computes any bucket
+        id; 4. write ``v{version}-{tag}`` partitioned by pb; 5. point
+        each touched bucket at its written ``pb=`` dir, or drop it when
+        none was written (all its rows gone); 6. bump the version, record
+        the epoch, swap the manifest atomically; 7. append lineage.
+
+        ``build(manifest)`` is a context manager yielding ``(rows,
+        touched, describe)``: the touched buckets' new rows (with the
+        ``bucket`` column), their bucket ids, and ``describe(version,
+        written)`` → the commit record. It stays open across the write,
+        so what it caches lives exactly that long. A crash before the
+        swap leaves the old snapshot and an unreferenced version dir
+        (:meth:`vacuum` reclaims it); the replay overwrites that dir.
+        """
+        t0 = time.time()
+        manifest = self._load_manifest()
+        if epoch_id is not None and epoch_id in manifest["epochs"]:
+            # exact epoch replay (foreachBatch restart) — already committed
+            return {"epoch": epoch_id, "skipped": True}
+
+        # The TABLE owns n_buckets: the constructor value applies only at
+        # creation; on resume the stored value wins. Otherwise a restart
+        # with a different n_buckets hashes deltas mod the wrong base and
+        # stale rows survive in never-reloaded buckets (silent duplicate
+        # keys — the exactly-once invariant breaks without any error).
+        stored = manifest.get("n_buckets")
+        if stored is None and manifest["buckets"]:
+            # Legacy manifest: committed buckets but no persisted base
+            # (written before n_buckets was recorded). Adopting the
+            # constructor default blind would be the exact violation the
+            # guard exists to prevent, so VERIFY the constructor base
+            # against the stored bucket column: exactly-once resume under
+            # base B needs every stored row to sit in bucket pmod(hash, B)
+            # — if that holds, deltas under B always reload the bucket
+            # holding any stale copy of their key. One-time full scan;
+            # the manifest records n_buckets afterwards.
+            self._verify_base_against_data(spark, manifest)
+        elif stored is not None:
+            self.n_buckets = stored
+        manifest["n_buckets"] = self.n_buckets
+        if self.extra_fields:
+            # commit the (possibly widened) table-owned schema
+            manifest["extra_fields"] = list(self.extra_fields.items())
+
+        version = manifest["version"] + 1
+        verdir = f"v{version}-{tag}"
+        out_dir = os.path.join(self.root, verdir)
+        with build(manifest) as (rows, touched, describe):
+            # ONE distributed write for all touched buckets (commit cost
+            # ∝ touched_buckets × table/n_buckets, module docstring);
+            # one task per bucket → exactly one file per pb= dir
+            (
+                rows.withColumn("pb", F.col("bucket"))
+                .repartition("pb")
+                .write.partitionBy("pb")
+                .mode("overwrite")
+                .parquet(out_dir)
+            )
+        written = {
+            name.split("=", 1)[1]
+            for name in os.listdir(out_dir)
+            if name.startswith("pb=")
+        }
+        for b in sorted(touched):
+            if str(b) in written:
+                manifest["buckets"][str(b)] = f"{verdir}/pb={b}"
+            else:
+                manifest["buckets"].pop(str(b), None)
+
+        manifest["version"] = version
+        if epoch_id is not None:
+            # window the last 1000 stream epochs (≥ 0) but keep EVERY
+            # reserved negative id (bootstrap, expiry horizons, DLQ
+            # replay): they grow with maintenance runs, not stream
+            # length, and evicting one would re-apply it on replay
+            ids = set(manifest["epochs"]) | {epoch_id}
+            manifest["epochs"] = sorted(e for e in ids if e < 0) + sorted(
+                e for e in ids if e >= 0
+            )[-1000:]
+        self._commit_manifest(manifest)
+        record = {
+            **describe(version, written),
+            "wall_s": round(time.time() - t0, 3),
+        }
+        with open(os.path.join(self.root, LINEAGE), "a") as f:
+            f.write(json.dumps(record) + "\n")
+        return record
+
     # -- read --------------------------------------------------------------
     _BASE_SCHEMA = (
         "conv_id string, turn_idx int, role string, text string,"
@@ -328,31 +429,45 @@ class MergeParquetSink:
         manifest = self._load_manifest()
         return self._read_paths(spark, list(manifest["buckets"].values()))
 
+    def live_rows(self, keys: DataFrame) -> DataFrame:
+        """Live (non-tombstone) rows of the conversations in ``keys``
+        (one distinct ``conv_id`` column) in the current snapshot: only
+        the keys' buckets are read, then broadcast-joined to the keys,
+        so the work is ∝ the keys' footprint, not the table size."""
+        manifest = self._load_manifest()
+        n_buckets = manifest.get("n_buckets", self.n_buckets)
+        buckets = [
+            r["b"]
+            for r in keys.select(bucket_of(n_buckets).alias("b"))
+            .distinct()
+            .collect()
+        ]
+        state = self._read_buckets(keys.sparkSession, manifest, buckets)
+        return state.where(F.col("op") != "d").join(F.broadcast(keys), "conv_id")
+
     def _read_paths(self, spark: SparkSession, rels: list[str]) -> DataFrame:
-        if not rels:
-            return spark.createDataFrame([], self._SCHEMA)
+        # no rels → an empty JVM-side scan, never createDataFrame([]):
+        # a local-list frame runs Python workers to produce zero rows
         files = [os.path.join(self.root, r) for r in rels]
         return spark.read.schema(self._SCHEMA).parquet(*files)
 
-    def _read_buckets(self, spark: SparkSession, buckets: list[int]) -> DataFrame | None:
-        manifest = self._load_manifest()
+    def _read_buckets(
+        self, spark: SparkSession, manifest: dict, buckets: list[int]
+    ) -> DataFrame:
+        # bucket is a stored column — touched buckets load without
+        # recomputing the hash
         rels = [
             manifest["buckets"][str(b)]
             for b in buckets
             if str(b) in manifest["buckets"]
         ]
-        if not rels:
-            return None
         return self._read_paths(spark, rels)
 
     def _verify_base_against_data(self, spark: SparkSession, manifest: dict) -> None:
         """Refuse to resume a legacy (pre-n_buckets) manifest unless the
         constructor base is provably consistent with the stored data."""
         table = self._read_paths(spark, list(manifest["buckets"].values()))
-        bad = table.where(
-            F.col("bucket")
-            != F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
-        ).count()
+        bad = table.where(F.col("bucket") != bucket_of(self.n_buckets)).count()
         if bad:
             raise ValueError(
                 f"manifest at {self.root} predates n_buckets tracking and "
@@ -373,82 +488,40 @@ class MergeParquetSink:
 
         Idempotent: re-running any epoch (or any overlap of epochs)
         converges to the same snapshot because winners are chosen by
-        ord = (seq, op_rank), never by arrival time. Returns per-epoch
-        lineage {epoch, buckets, delta_rows, merged_rows, wall_s}.
+        ord = (seq, op_rank), never by arrival time. Returns the epoch's
+        lineage record {epoch, buckets, delta_rows, buckets_rewritten,
+        wall_s}, or {epoch, skipped: True} for an already-committed epoch.
         """
         spark = batch.sparkSession
-        t0 = time.time()
-        manifest = self._load_manifest()
-        if epoch_id in manifest["epochs"]:
-            # exact epoch replay (foreachBatch restart) — already committed
-            return {"epoch": epoch_id, "skipped": True}
 
-        # The TABLE owns n_buckets: the constructor value applies only at
-        # creation; on resume the stored value wins. Otherwise a restart
-        # with a different n_buckets hashes deltas mod the wrong base and
-        # stale rows survive in never-reloaded buckets (silent duplicate
-        # keys — the exactly-once invariant breaks without any error).
-        stored = manifest.get("n_buckets")
-        if stored is None and manifest["buckets"]:
-            # Legacy manifest: committed buckets but no persisted base
-            # (written before n_buckets was recorded). Adopting the
-            # constructor default blind would be the exact violation the
-            # guard exists to prevent, so VERIFY the constructor base
-            # against the stored bucket column: exactly-once resume under
-            # base B needs every stored row to sit in bucket pmod(hash, B)
-            # — if that holds, deltas under B always reload the bucket
-            # holding any stale copy of their key. One-time full scan;
-            # the manifest records n_buckets afterwards.
-            self._verify_base_against_data(spark, manifest)
-            stored = self.n_buckets
-        if stored is not None and stored != self.n_buckets:
-            self.n_buckets = stored
-        manifest["n_buckets"] = self.n_buckets
-        if self.extra_fields:
-            # commit the (possibly widened) table-owned schema
-            manifest["extra_fields"] = list(self.extra_fields.items())
+        @contextmanager
+        def build(manifest):
+            delta = (
+                envelope_rows(batch, self.extra_fields)
+                .withColumn("bucket", bucket_of(self.n_buckets))
+                .cache()
+            )
+            try:
+                # one bounded job (≤ n_buckets rows) yields both the
+                # delta size and the touched buckets
+                counts = {
+                    r["bucket"]: r["count"]
+                    for r in delta.groupBy("bucket").count().collect()
+                }
+                touched = sorted(counts)
+                current = self._read_buckets(spark, manifest, touched)
+                yield lww_winners(current.unionByName(delta)), touched, (
+                    lambda _version, _written: {
+                        "epoch": int(epoch_id),
+                        "buckets": touched,
+                        "delta_rows": sum(counts.values()),
+                        "buckets_rewritten": len(touched),
+                    }
+                )
+            finally:
+                delta.unpersist()
 
-        delta = envelope_rows(batch, self.extra_fields).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int"),
-        )
-        delta = delta.cache()
-        delta_rows = delta.count()
-        touched = [r["bucket"] for r in delta.select("bucket").distinct().collect()]
-
-        # bucket is a stored column — touched buckets load without
-        # recomputing the hash
-        current = self._read_buckets(spark, touched)
-        merged_src = delta if current is None else current.unionByName(delta)
-
-        out = lww_winners(merged_src)
-
-        # ONE distributed write for all touched buckets (partition-pruned
-        # rewrite — commit cost ∝ touched_buckets × table/n_buckets; see
-        # module docstring for the n_buckets sizing that keeps this ∝
-        # batch footprint).
-        new_version = manifest["version"] + 1
-        verdir = f"v{new_version}-{epoch_id}"
-        out.withColumn("pb", F.col("bucket")).repartition("pb").write.partitionBy(
-            "pb"
-        ).mode("overwrite").parquet(os.path.join(self.root, verdir))
-        for b in touched:
-            manifest["buckets"][str(b)] = f"{verdir}/pb={b}"
-        delta.unpersist()
-
-        manifest["version"] = new_version
-        manifest["epochs"] = sorted(set(manifest["epochs"]) | {epoch_id})[-1000:]
-        self._commit_manifest(manifest)
-        lineage = {
-            "epoch": int(epoch_id),
-            "buckets": [int(b) for b in sorted(touched)],
-            "delta_rows": int(delta_rows),
-            "buckets_rewritten": len(touched),
-            "wall_s": round(time.time() - t0, 3),
-        }
-        with open(os.path.join(self.root, LINEAGE), "a") as f:
-            f.write(json.dumps(lineage) + "\n")
-        return lineage
+        return self._commit(spark, epoch_id, str(epoch_id), build)
 
     # -- maintenance ---------------------------------------------------------
     def vacuum(self, dry_run: bool = False) -> dict:
@@ -533,64 +606,36 @@ class MergeParquetSink:
         Same single-writer contract as :meth:`vacuum`. Epoch bookkeeping
         is untouched: replays of already-committed epochs stay no-ops.
         """
-        t0 = time.time()
-        manifest = self._load_manifest()
-        if not manifest["buckets"]:
+        if not self._load_manifest()["buckets"]:
             return {"compacted": False, "reason": "empty table"}
-        table = self._read_paths(spark, list(manifest["buckets"].values()))
-        if prune_tombstones_below_seq is not None:
-            table = table.where(
-                (F.col("op") != "d")
-                | (F.col("seq") >= F.lit(int(prune_tombstones_below_seq)))
+
+        @contextmanager
+        def build(manifest):
+            table = self._read_paths(spark, list(manifest["buckets"].values()))
+            if prune_tombstones_below_seq is not None:
+                table = table.where(
+                    (F.col("op") != "d")
+                    | (F.col("seq") >= F.lit(int(prune_tombstones_below_seq)))
+                )
+            if new_n_buckets is not None:
+                self.n_buckets = int(new_n_buckets)
+                manifest["n_buckets"] = self.n_buckets
+                table = table.withColumn("bucket", bucket_of(self.n_buckets))
+            # every stored bucket and every bucket of the (new) base is
+            # replaced; one whose rows were ALL pruned tombstones writes
+            # no dir and so leaves the manifest
+            touched = {int(b) for b in manifest["buckets"]} | set(
+                range(self.n_buckets)
             )
-        if new_n_buckets is not None:
-            self.n_buckets = int(new_n_buckets)
-            manifest["n_buckets"] = self.n_buckets
-            table = table.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast(
-                    "int"
-                ),
-            )
-        if self.extra_fields:
-            # a compact is also a commit point for a pending widening —
-            # the rewrite materializes the evolved columns physically
-            manifest["extra_fields"] = list(self.extra_fields.items())
-        new_version = manifest["version"] + 1
-        verdir = f"v{new_version}-compact"
-        # repartition on the stored bucket column → all rows of a bucket
-        # land in one task → exactly one file per pb= dir
-        (
-            table.withColumn("pb", F.col("bucket"))
-            .repartition("pb")
-            .write.partitionBy("pb")
-            .mode("overwrite")
-            .parquet(os.path.join(self.root, verdir))
-        )
-        written = {
-            name.split("=", 1)[1]
-            for name in os.listdir(os.path.join(self.root, verdir))
-            if name.startswith("pb=")
-        }
-        # a bucket whose rows were ALL pruned tombstones writes no dir —
-        # it leaves the manifest entirely (reads skip it; a future delta
-        # for it is a plain insert)
-        manifest["buckets"] = {
-            b: f"{verdir}/pb={b}" for b in sorted(written, key=int)
-        }
-        manifest["version"] = new_version
-        self._commit_manifest(manifest)
-        out = {
-            "compacted": True,
-            "version": new_version,
-            "buckets": len(written),
-            "n_buckets": self.n_buckets,
-            "pruned_below_seq": prune_tombstones_below_seq,
-            "wall_s": round(time.time() - t0, 3),
-        }
-        with open(os.path.join(self.root, LINEAGE), "a") as f:
-            f.write(json.dumps({"compact": out}) + "\n")
-        return out
+            yield table, touched, lambda version, written: {
+                "compacted": True,
+                "version": version,
+                "buckets": len(written),
+                "n_buckets": self.n_buckets,
+                "pruned_below_seq": prune_tombstones_below_seq,
+            }
+
+        return self._commit(spark, None, "compact", build)
 
     def expire_conversations(
         self, spark: SparkSession, older_than_seq: int, epoch_id: int | None = None

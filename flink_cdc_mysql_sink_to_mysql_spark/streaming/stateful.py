@@ -103,7 +103,7 @@ def conversation_progress_stream(
     checkpoint_dir: str,
 ):
     """Run the stateful progress operator over the envelope spool."""
-    from .pipeline import envelope_stream
+    from .pipeline import envelope_stream, run_available_now
 
     env = envelope_stream(spark, spool_dir)
     turns = env.where(F.col("after").isNotNull()).select(
@@ -118,15 +118,12 @@ def conversation_progress_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
+    run_available_now(
         prog.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return out_dir
 
 
@@ -160,7 +157,7 @@ def conversation_progress_stream_tws(
         StatefulProcessorHandle,
     )
 
-    from .pipeline import envelope_stream
+    from .pipeline import envelope_stream, run_available_now
 
     class ProgressProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -213,15 +210,12 @@ def conversation_progress_stream_tws(
         outputMode="Append",
         timeMode="None",
     )
-    q = (
+    run_available_now(
         prog.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return out_dir
 
 
@@ -324,7 +318,7 @@ def tool_loop_stream(
     turns (one edited turn counted twice). Filtering ops keeps the state
     O(1) per conv — deduping on (conv_id, turn_idx) instead would need
     a per-key seen-set."""
-    from .pipeline import envelope_stream
+    from .pipeline import envelope_stream, run_available_now
 
     env = envelope_stream(spark, spool_dir)
     turns = env.where(
@@ -343,15 +337,12 @@ def tool_loop_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
+    run_available_now(
         alerts.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return out_dir
 
 
@@ -483,7 +474,7 @@ def abandoned_conversations_stream(
     :func:`abandoned_conversations_batch` (session_window + the same
     final-watermark cutoff) — set-equality pinned in tests.
     """
-    from .pipeline import envelope_stream
+    from .pipeline import envelope_stream, run_available_now
 
     env = envelope_stream(spark, spool_dir)
     turns = (
@@ -502,15 +493,12 @@ def abandoned_conversations_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
+    run_available_now(
         out.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return out_dir
 
 

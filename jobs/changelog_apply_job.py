@@ -34,6 +34,7 @@ sys.path.insert(
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from flink_cdc_mysql_sink_to_mysql_spark.plans import heap  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (  # noqa: E402
     mongo_changelog,
     mysql_changelog,
@@ -69,6 +70,18 @@ def _extra_field_spec(spec: str) -> tuple[str, str]:
     except ValueError as exc:
         raise argparse.ArgumentTypeError(str(exc)) from None
     return name, typ
+
+
+def _check_driver_heap(spark: SparkSession, sf_dir: str) -> None:
+    """Refuse an undersized driver before the spool sort and the
+    ``--bootstrap`` one-shot MERGE take the whole changelog."""
+    heap.check_driver_heap(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        job="changelog_apply_job",
+        needs="the spool sort and the --bootstrap one-shot MERGE over "
+        "the whole changelog",
+    )
 
 
 def main() -> None:
@@ -160,6 +173,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("changelog-apply").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
+    _check_driver_heap(spark, args.sf_dir)
 
     extra_fields = dict(args.extra_field) if args.extra_field else None
 

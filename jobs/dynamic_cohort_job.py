@@ -33,6 +33,7 @@ sys.path.insert(
 from pyspark.sql import SparkSession  # noqa: E402
 
 from flink_cdc_mysql_sink_to_mysql_spark.operators import cohort  # noqa: E402
+from flink_cdc_mysql_sink_to_mysql_spark.plans import heap  # noqa: E402
 from flink_cdc_mysql_sink_to_mysql_spark.sources.transcripts import (  # noqa: E402
     mysql_changelog,
 )
@@ -40,6 +41,18 @@ from flink_cdc_mysql_sink_to_mysql_spark.streaming import (  # noqa: E402
     cohort_stream as cs,
 )
 from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl  # noqa: E402
+
+
+def _check_driver_heap(spark: SparkSession, sf_dir: str) -> None:
+    """Refuse an undersized driver before the spool sort and the
+    membership snapshots read the whole changelog / cube history."""
+    heap.check_driver_heap(
+        spark,
+        os.path.join(sf_dir, "events.parquet"),
+        job="dynamic_cohort_job",
+        needs="the spool sort and the per-batch membership snapshots "
+        "over the cube-delta history",
+    )
 
 
 def main() -> None:
@@ -106,6 +119,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("dynamic-cohort").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("ERROR")
+    _check_driver_heap(spark, args.sf_dir)
 
     spool = os.path.join(args.workdir, "spool")
     if not os.path.isdir(spool):

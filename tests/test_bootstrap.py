@@ -94,3 +94,31 @@ def test_bootstrap_resume_is_noop(spark, tmp_path):
     assert version_after_bootstrap == 1
     assert rows_of(sink.snapshot(spark)) == rows_of(cdc.apply_changelog(full))
     assert pl.BOOTSTRAP_EPOCH in manifest["epochs"]
+
+
+def test_reserved_epochs_survive_the_stream_epoch_window(spark, tmp_path):
+    """The manifest keeps only the newest 1000 stream epochs (≥ 0), but
+    never evicts a reserved negative id: after 1000+ stream epochs a
+    resumed bootstrap must still epoch-skip instead of re-running its
+    whole-table MERGE, and replaying an evicted stream epoch converges
+    to the same snapshot (LWW idempotence)."""
+    full, snapshot, tail = _phases(spark)
+    sink = MergeParquetSink(str(tmp_path / "table"), n_buckets=8)
+    sink.merge_changelog(snapshot, pl.BOOTSTRAP_EPOCH)
+    sink.merge_changelog(tail, 0)
+
+    # a long-running stream: epochs 0..999 already committed
+    mpath = f"{sink.root}/_manifest.json"
+    manifest = json.load(open(mpath))
+    manifest["epochs"] = [pl.BOOTSTRAP_EPOCH, *range(1000)]
+    json.dump(manifest, open(mpath, "w"))
+
+    assert not sink.merge_changelog(tail, 1000).get("skipped")
+    epochs = json.load(open(mpath))["epochs"]
+    assert pl.BOOTSTRAP_EPOCH in epochs and 0 not in epochs
+    assert sorted(e for e in epochs if e >= 0) == list(range(1, 1001))
+
+    expected = rows_of(cdc.apply_changelog(full))
+    assert sink.merge_changelog(snapshot, pl.BOOTSTRAP_EPOCH).get("skipped")
+    assert not sink.merge_changelog(tail, 0).get("skipped")  # evicted
+    assert rows_of(sink.snapshot(spark)) == expected

@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
 
 from curation_job import run  # noqa: E402
@@ -115,3 +117,25 @@ def test_shared_heap_failfast_helper(spark):
         spark, "/nonexistent/input.parquet", job="j", needs="x",
         min_heap_bytes=1 << 60, large_input_bytes=1,
     )
+
+
+@pytest.mark.parametrize("job_name", ["changelog_apply_job", "dynamic_cohort_job"])
+def test_stream_job_heap_failfast(spark, monkeypatch, job_name):
+    """The streaming jobs refuse an undersized driver (one SystemExit
+    naming the job and --driver-memory) before the spool sort, the
+    --bootstrap one-shot MERGE or the stream starts; an adequate heap
+    is a no-op."""
+    import functools
+    import importlib
+
+    from flink_cdc_mysql_sink_to_mysql_spark.plans import heap
+
+    job = importlib.import_module(job_name)
+    check = heap.check_driver_heap
+    monkeypatch.setattr(heap, "check_driver_heap", functools.partial(
+        check, min_heap_bytes=1 << 60, large_input_bytes=1))
+    with pytest.raises(SystemExit, match=rf"{job_name}.*--driver-memory 8g"):
+        job._check_driver_heap(spark, SF)
+    monkeypatch.setattr(heap, "check_driver_heap", functools.partial(
+        check, min_heap_bytes=1, large_input_bytes=1))
+    job._check_driver_heap(spark, SF)

@@ -10,6 +10,7 @@ cannot do any of that — this is the changelog-correct twin.
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 import duckdb
 from pyspark.sql import functions as F
@@ -389,6 +390,46 @@ def test_replay_and_partial_commit_converge(spark, tmp_path):
         spark, spool, state, view, str(tmp_path / "ckpt2")
     )
     assert_same(_view_ms(view.read_view(spark)), expected, "full replay")
+
+
+def test_torn_view_commit_recovers(spark, tmp_path):
+    """Crash inside the VIEW commit — after the view's version dir is
+    written, before its manifest swap, with the state commit of the
+    same epoch already landed — must resume on the same checkpoint to
+    the batch-twin view, with no manifest entry pointing at a missing
+    dir (the view table shares the state table's commit protocol)."""
+    import os
+
+    import pytest
+
+    env = mysql_changelog(spark, SF_SMOKE).unionByName(_crafted(spark))
+    expected = _view_ms(windowed_state_batch(env)).toPandas()
+    spool = str(tmp_path / "spool")
+    pl.spool_changelog(env, spool, n_chunks=3)
+    state = MergeParquetSink(str(tmp_path / "state"), n_buckets=8)
+    view = GroupedReplaceParquetSink(str(tmp_path / "view"), n_buckets=8)
+
+    real_commit = view._commit_manifest
+    swaps = []
+
+    def torn_once(manifest):
+        swaps.append(manifest["version"])
+        if len(swaps) == 2:  # the second epoch's view swap never lands
+            raise RuntimeError("crash between view write and manifest swap")
+        real_commit(manifest)
+
+    view._commit_manifest = torn_once
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(Exception, match="manifest swap"):
+        windowed_state_stream(spark, spool, state, view, ckpt)
+
+    windowed_state_stream(spark, spool, state, view, ckpt)
+    assert len(swaps) > 3  # the torn epoch was replayed, then the rest
+    assert_same(_view_ms(view.read_view(spark)), expected, "torn view commit")
+    for root in (state.root, view.root):
+        with open(os.path.join(root, "_manifest.json")) as f:
+            rels = json.load(f)["buckets"].values()
+        assert all(os.path.isdir(os.path.join(root, rel)) for rel in rels)
 
 
 def test_view_sink_compact_vacuum_and_keeps_serving(spark, tmp_path):

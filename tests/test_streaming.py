@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc
 from flink_cdc_mysql_sink_to_mysql_spark.sources import mysql_changelog
 from flink_cdc_mysql_sink_to_mysql_spark.streaming import pipeline as pl
+from flink_cdc_mysql_sink_to_mysql_spark.streaming.ivm import GroupedReplaceParquetSink
 from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import MergeParquetSink
 
 SF = "/root/testdata/sf0.001"
@@ -243,62 +244,88 @@ def test_console_sink_starts_and_drains(spark, tmp_path):
         q.stop()
 
 
+_ENV_DDL = (
+    "op string, after struct<conv_id:string,turn_idx:int,"
+    "role:string,text:string,tool:string,ts:timestamp>,"
+    " before struct<conv_id:string,turn_idx:int,role:string,"
+    "text:string,tool:string,ts:timestamp>, seq long"
+)
+
+
+def _env_batch(spark, rows):
+    return spark.createDataFrame(
+        [
+            (
+                "c",
+                {
+                    "conv_id": cid,
+                    "turn_idx": ti,
+                    "role": "user",
+                    "text": tx,
+                    "tool": None,
+                    "ts": dt.datetime(2024, 1, 1),
+                },
+                None,
+                seq,
+            )
+            for cid, ti, tx, seq in rows
+        ],
+        _ENV_DDL,
+    )
+
+
 def test_sink_n_buckets_is_table_owned(spark, tmp_path):
     """Resuming a table with a different constructor n_buckets must NOT
     re-bucket deltas mod a different base (silent duplicate keys): the
     stored manifest value wins over the constructor argument."""
-    import datetime as dt
-
-    from flink_cdc_mysql_sink_to_mysql_spark.streaming.sink import (
-        MergeParquetSink,
-    )
-
-    def env_batch(rows):
-        return spark.createDataFrame(
-            [
-                (
-                    "c",
-                    {
-                        "conv_id": cid,
-                        "turn_idx": ti,
-                        "role": "user",
-                        "text": tx,
-                        "tool": None,
-                        "ts": dt.datetime(2024, 1, 1),
-                    },
-                    None,
-                    seq,
-                )
-                for cid, ti, tx, seq in rows
-            ],
-            "op string, after struct<conv_id:string,turn_idx:int,"
-            "role:string,text:string,tool:string,ts:timestamp>,"
-            " before struct<conv_id:string,turn_idx:int,role:string,"
-            "text:string,tool:string,ts:timestamp>, seq long",
-        )
-
     root = str(tmp_path / "tbl")
     rows1 = [(f"c{i}", 0, "v1", 1) for i in range(40)]
-    MergeParquetSink(root, n_buckets=8).merge_changelog(env_batch(rows1), 0)
+    MergeParquetSink(root, n_buckets=8).merge_changelog(
+        _env_batch(spark, rows1), 0
+    )
 
     # resume with a DIFFERENT constructor value: updates to the same keys
     resumed = MergeParquetSink(root, n_buckets=32)
     rows2 = [(f"c{i}", 0, "v2", 2) for i in range(40)]
-    resumed.merge_changelog(env_batch(rows2), 1)
+    resumed.merge_changelog(_env_batch(spark, rows2), 1)
     assert resumed.n_buckets == 8  # table-owned value adopted
 
     snap = resumed.snapshot(spark)
     assert snap.count() == 40  # no duplicate (conv_id, turn_idx) keys
     assert snap.where("text != 'v2'").count() == 0  # every key updated
 
-    # LEGACY manifest (pre-n_buckets key, the round-2 ADVICE hole):
-    # resuming with a base inconsistent with the stored bucket column
-    # must REFUSE rather than silently strand stale keys; resuming with
-    # the matching base verifies against the data and proceeds.
-    import json
-    import os
 
-    import pytest
+def _merge_40(spark, sink, version, epoch):
+    rows = [(f"c{i}", 0, f"v{version}", version) for i in range(40)]
+    sink.merge_changelog(_env_batch(spark, rows), epoch)
+    return sink.snapshot(spark).where(F.col("text") != f"v{version}")
+
+
+def _replace_40(spark, sink, version, epoch):
+    keys = spark.createDataFrame([(f"c{i}",) for i in range(40)], "conv_id string")
+    rows = keys.select(
+        "conv_id",
+        F.lit(dt.datetime(2024, 1, 1)).alias("win_start"),
+        F.lit(dt.datetime(2024, 1, 1, 0, 10)).alias("win_end"),
+        F.lit(version).cast("long").alias("n_turns"),
+    )
+    sink.replace_groups(keys, rows, epoch)
+    return sink.read_view(spark).where(F.col("n_turns") != version)
+
+
+@pytest.mark.parametrize(
+    "sink_cls,commit",
+    [(MergeParquetSink, _merge_40), (GroupedReplaceParquetSink, _replace_40)],
+    ids=["merge", "grouped_replace"],
+)
+def test_legacy_manifest_n_buckets_is_verified(spark, tmp_path, sink_cls, commit):
+    """LEGACY manifest (pre-n_buckets key, the round-2 ADVICE hole):
+    resuming with a base inconsistent with the stored bucket column
+    must REFUSE rather than silently strand stale keys; resuming with
+    the matching base verifies against the data and proceeds. Both
+    bucketed tables commit through the same path, so both refuse."""
+    root = str(tmp_path / "tbl")
+    commit(spark, sink_cls(root, n_buckets=8), 1, 0)
 
     mpath = os.path.join(root, "_manifest.json")
     with open(mpath) as f:
@@ -307,18 +334,14 @@ def test_sink_n_buckets_is_table_owned(spark, tmp_path):
     with open(mpath, "w") as f:
         json.dump(manifest, f)
 
-    rows3 = [(f"c{i}", 0, "v3", 3) for i in range(40)]
     with pytest.raises(ValueError, match="n_buckets"):
-        MergeParquetSink(root, n_buckets=256).merge_changelog(
-            env_batch(rows3), 2
-        )
-    # legit base: one-time data verification, then the merge lands and
+        commit(spark, sink_cls(root, n_buckets=256), 3, 2)
+    # legit base: one-time data verification, then the commit lands and
     # the manifest records n_buckets again
-    legit = MergeParquetSink(root, n_buckets=8)
-    legit.merge_changelog(env_batch(rows3), 2)
-    snap3 = legit.snapshot(spark)
-    assert snap3.count() == 40
-    assert snap3.where("text != 'v3'").count() == 0
+    legit = sink_cls(root, n_buckets=8)
+    stale = commit(spark, legit, 3, 2)
+    assert legit.read(spark).count() == 40  # no duplicate keys
+    assert stale.count() == 0  # every key carries the new value
     with open(mpath) as f:
         assert json.load(f)["n_buckets"] == 8
 
