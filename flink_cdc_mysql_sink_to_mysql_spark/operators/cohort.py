@@ -33,9 +33,9 @@ TARGET_TO_KIND = {0: 1, 1: 2, 2: 3, 3: 4, 6: 5, 8: 10}
 
 #: THE dimension registry (UserGroupDimensionEnum.java:9-11): code →
 #: (algebraic fn, event column, cube partial column). Every dispatch
-#: table below — direct agg, salted spec, cube re-agg, and the
-#: streaming stats filter in cohort_stream — derives from this single
-#: source, so a new dimension lands everywhere or nowhere.
+#: table below — direct agg, salted spec and cube re-agg (which also
+#: serves the streaming cohorts in cohort_stream) — derives from this
+#: single source, so a new dimension lands everywhere or nowhere.
 DIMENSIONS = {
     1: ("sum", "metric", "sum_metric"),
     2: ("count", "_one", "cnt"),

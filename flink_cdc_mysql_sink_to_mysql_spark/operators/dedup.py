@@ -15,10 +15,11 @@ Scale design (the part that matters at 100 TB):
   come from an equi-join on (band_idx, band_key) — shuffle keys are
   16-byte hashes, AQE skew-join splits hot buckets. The exact-Jaccard
   verify re-joins shingle sets only for candidate pairs.
-- **SimHash** uses 4-byte banding over a 32-bit signature: pigeonhole
-  guarantees 100% recall for Hamming distance ≤ 3 (3 flipped bits cannot
-  touch all 4 bands), so the banded join is *exactly* equivalent to the
-  O(n²) scan the oracle runs — same results, linear-ish cost.
+- **SimHash** probes the two 16-bit halves of a 32-bit signature, each
+  exact or with one bit flipped: pigeonhole guarantees 100% recall for
+  Hamming distance ≤ 3 (some half carries ≤ 1 flipped bit), so the
+  half-enumeration join is *exactly* equivalent to the O(n²) scan the
+  oracle runs — same results, linear-ish cost.
 - **Embedding near-dup** is the brute-force baseline (block-nested-loop);
   the LSH-bucketed scale path lives in operators/similarity.py.
 
@@ -294,8 +295,10 @@ def _minhash_consts(k: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, mh0..mh{K-1}) — K minhashes per doc.
+def _minhash_from_shingle_rows(ex: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh{K-1}) — K minhashes per doc over an exploded
+    (doc_id, s) shingle relation (callers feed ``shingle_rows`` or a
+    materialized tokenize-once frame).
 
     ONE md5 per shingle → 28-bit fingerprint x; hash_k = (a_k·x + b_k)
     mod 2^31-1 with per-k universal-hash constants (a_k·x < 2^59: no
@@ -306,18 +309,11 @@ def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
     recovers banding-curve recall (0 misses on the test corpus at both
     gate SFs).
 
-    Scalable shape: explode shingles → hash once → groupBy(doc_id) with
-    K min() aggregates. The mins partial-aggregate map-side, so the
-    shuffle carries K ints per doc, not the shingle set; md5 runs once
-    per (doc, shingle) instead of K times.
+    Scalable shape: hash once → groupBy(doc_id) with K min()
+    aggregates. The mins partial-aggregate map-side, so the shuffle
+    carries K ints per doc, not the shingle set; md5 runs once per
+    (doc, shingle) instead of K times.
     """
-    return _minhash_from_shingle_rows(shingle_rows(docs, n))
-
-
-def _minhash_from_shingle_rows(ex: DataFrame) -> DataFrame:
-    """K-minhash aggregation over an exploded (doc_id, s) shingle
-    relation — split out so minhash_lsh_pairs can feed a materialized
-    tokenize-once frame instead of re-deriving shingles per consumer."""
     x = F.conv(F.substring(F.md5(F.col("s")), 1, 7), 16, 10).cast("long")
     ex = ex.select("doc_id", x.alias("x"))
     return ex.groupBy("doc_id").agg(
@@ -618,7 +614,6 @@ def substring_containment_sql(rel: str, k: int = SUBSTR_MIN_WORDS) -> str:
 
 SIMHASH_BITS = 32
 HAMMING_MAX = 3
-_BAND_BYTES = 4  # 4 bands × 8 bits; pigeonhole-exact for HAMMING_MAX ≤ 3
 
 
 def _word_hash(x: Column) -> Column:
@@ -697,15 +692,15 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     equi-join on (half, value) finds EVERY qualifying pair — same rows
     as the O(n²) oracle scan, verified by the same exact Hamming filter.
 
-    Why this beats the previous 8-bit byte-banded self-join (kept below
-    as :func:`simhash_pairs_banded` for the A/B): blocking-key entropy.
-    With n docs, an 8-bit band packs ~n/256 docs per bucket and the
-    join ENUMERATES ~4·n²/256 candidate rows (measured: the dominant
-    cost at 500k docs — ~3.9G enumerated rows, 35.6 s); 16-bit blocks
-    cut bucket occupancy to ~n/65536, i.e. ~34·n²/65536 enumerated rows
-    — ~30× fewer at any n — for a 17× larger (but still narrow: three
-    ints + a long) probe side that partial-aggregates nothing and
-    carries no arrays. Same output, same oracle; pure plan change.
+    Why this beats the previous 8-bit byte-banded self-join:
+    blocking-key entropy. With n docs, an 8-bit band packs ~n/256 docs
+    per bucket and the join ENUMERATES ~4·n²/256 candidate rows
+    (measured: the dominant cost at 500k docs — ~3.9G enumerated rows,
+    35.6 s); 16-bit blocks cut bucket occupancy to ~n/65536, i.e.
+    ~34·n²/65536 enumerated rows — ~30× fewer at any n — for a 17×
+    larger (but still narrow: three ints + a long) probe side that
+    partial-aggregates nothing and carries no arrays. Same output, same
+    oracle; pure plan change.
     """
     return _pairs_from_signatures(simhash(docs))
 
@@ -770,58 +765,6 @@ def _pairs_from_signatures(sh: DataFrame) -> DataFrame:
             b,
             (F.col("a.half") == F.col("b.half"))
             & (F.col("a.value") == F.col("b.value"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
-    )
-
-
-def simhash_pairs_banded(docs: DataFrame) -> DataFrame:
-    """Hamming(simhash) ≤ 3 pairs via the 8-bit byte-banded self-join.
-
-    Pigeonhole: ≤3 differing bits over 4 disjoint bytes ⇒ at least one
-    byte equal ⇒ the banded equi-join finds EVERY qualifying pair — the
-    oracle's O(n²) scan and this plan return identical rows. Kept as
-    the A/B twin of :func:`simhash_pairs` (the half-enumeration plan
-    that replaced it — see there for the measured blocking-entropy
-    argument); equality of the three forms is pinned in
-    tests/test_training_ops.py.
-    """
-    sh = simhash(docs)
-    bands = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("simhash"), 8 * i)
-                        .bitwiseAND(F.lit(255))
-                        .alias("byte"),
-                    )
-                    for i in range(_BAND_BYTES)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.byte")
-
-    a = bands.alias("a")
-    b = bands.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.byte") == F.col("b.byte"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(

@@ -2,9 +2,11 @@
 
 North rule: join user-turns to assistant/tool-turns on conv_id with an
 event-time bound. The reference only has a union (U1); this is the new
-stateful capability. Batch form below (oracle-checkable); streaming
-form in streaming/pipeline.py uses the same plan with watermarks on
-both sides so state is evictable.
+stateful capability. The join is written once: :func:`response_sides`
+builds the two inputs and :func:`pair_responses` joins them. The batch
+form (oracle-checkable) composes the two directly; the streaming form
+(streaming/pipeline.py:stream_stream_join) watermarks each side
+between the two steps so state is evictable.
 
 Scale: an equi-join on conv_id with a range predicate on ts — Spark
 plans a sort-merge join on conv_id partitions; the time bound prunes
@@ -18,13 +20,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def user_turn_responses(
+def response_sides(
     turns: DataFrame,
-    max_delay: str = "INTERVAL 30 MINUTES",
     respond_roles: tuple[str, ...] = ("assistant", "tool"),
-) -> DataFrame:
-    """Pair each user turn with every assistant/tool turn in the same
-    conversation within (u.ts, u.ts + max_delay]."""
+) -> tuple[DataFrame, DataFrame]:
+    """The two join inputs: user turns (u_conv, u_idx, u_ts) and
+    responder turns (a_conv, a_idx, a_role, a_ts)."""
     u = turns.where(F.col("role") == "user").select(
         F.col("conv_id").alias("u_conv"),
         F.col("turn_idx").alias("u_idx"),
@@ -36,6 +37,16 @@ def user_turn_responses(
         F.col("role").alias("a_role"),
         F.col("ts").alias("a_ts"),
     )
+    return u, a
+
+
+def pair_responses(
+    u: DataFrame, a: DataFrame, max_delay: str = "INTERVAL 30 MINUTES"
+) -> DataFrame:
+    """Pair each user turn with every responder turn in the same
+    conversation within (u_ts, u_ts + max_delay]. In a stream, each
+    side carries its own watermark; the time bound lets the state store
+    evict a side's rows once the other side's watermark passes it."""
     cond = (
         (u["u_conv"] == a["a_conv"])
         & (a["a_ts"] > u["u_ts"])
@@ -48,6 +59,16 @@ def user_turn_responses(
         "a_role",
         (F.unix_millis("a_ts") - F.unix_millis("u_ts")).alias("latency_ms"),
     )
+
+
+def user_turn_responses(
+    turns: DataFrame,
+    max_delay: str = "INTERVAL 30 MINUTES",
+    respond_roles: tuple[str, ...] = ("assistant", "tool"),
+) -> DataFrame:
+    """Pair each user turn with every assistant/tool turn in the same
+    conversation within (u.ts, u.ts + max_delay]."""
+    return pair_responses(*response_sides(turns, respond_roles), max_delay)
 
 
 def first_response(turns: DataFrame, max_delay: str = "INTERVAL 30 MINUTES") -> DataFrame:
@@ -176,36 +197,3 @@ def asof_prev_user_sql(rel: str) -> str:
     FROM a ASOF LEFT JOIN u
       ON a.conv_id = u.conv_id AND a.ts >= u.ts
     """
-
-
-def streaming_user_responses(
-    user_stream: DataFrame,
-    responder_stream: DataFrame,
-    watermark: str = "1 hour",
-    max_delay: str = "INTERVAL 30 MINUTES",
-) -> DataFrame:
-    """Watermarked stream-stream inner join (state evicted once both
-    watermarks pass the time bound)."""
-    u = user_stream.withWatermark("ts", watermark).select(
-        F.col("conv_id").alias("u_conv"),
-        F.col("turn_idx").alias("u_idx"),
-        F.col("ts").alias("u_ts"),
-    )
-    a = responder_stream.withWatermark("ts", watermark).select(
-        F.col("conv_id").alias("a_conv"),
-        F.col("turn_idx").alias("a_idx"),
-        F.col("role").alias("a_role"),
-        F.col("ts").alias("a_ts"),
-    )
-    cond = (
-        (u["u_conv"] == a["a_conv"])
-        & (a["a_ts"] > u["u_ts"])
-        & (a["a_ts"] <= u["u_ts"] + F.expr(max_delay))
-    )
-    return u.join(a, cond, "inner").select(
-        F.col("u_conv").alias("conv_id"),
-        "u_idx",
-        "a_idx",
-        "a_role",
-        (F.unix_millis("a_ts") - F.unix_millis("u_ts")).alias("latency_ms"),
-    )

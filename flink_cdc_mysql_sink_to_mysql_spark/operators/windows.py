@@ -7,6 +7,12 @@ tumbling/sliding/session windows with event-time watermarks. All three
 are native Spark operators (`F.window`, `F.session_window`) — hash
 aggregations with map-side partial agg; no custom state code needed.
 
+Each count body is written once (:func:`window_counts`,
+:func:`session_counts`); the batch queries project it to epoch millis,
+the append streams (streaming/pipeline.py) run it over watermarked
+input, and the maintained views (streaming/ivm.py) run it as their
+per-epoch recompute.
+
 Scale notes:
 - tumbling/sliding aggregate on (window, conv_id) — the window column
   widens the key space, so zipf-skew on conv_id is diluted per window;
@@ -43,44 +49,74 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    turns: DataFrame, size: str = "10 minutes", slide: str = "5 minutes"
+def window_counts(
+    turns: DataFrame, window: str, slide: str | None = None
 ) -> DataFrame:
-    """Per-conv sliding window counts (each row lands in size/slide
-    windows — Spark expands via its internal window generator, no
-    explode needed in user code)."""
+    """Per-conv turn counts per tumbling (or, with ``slide``, sliding)
+    window: ``win_start, win_end, conv_id, n_turns``. With a slide,
+    Spark's window generator assigns each turn to its window/slide
+    covering windows — no explode in user code. The (window, conv_id)
+    grouping order is the append stream's state-store key schema:
+    changing it breaks resume from existing checkpoints."""
+    win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
-        turns.groupBy(F.window("ts", size, slide).alias("win"), "conv_id")
+        turns.groupBy(win.alias("win"), "conv_id")
         .agg(F.count(F.lit(1)).alias("n_turns"))
         .select(
-            F.unix_millis(F.col("win.start")).alias("win_start_ms"),
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
             "conv_id",
             "n_turns",
         )
     )
 
 
-def session_windows(
-    turns: DataFrame, gap: str = "30 minutes"
-) -> DataFrame:
-    """Turn-gap sessionization per conv_id (north-rule requirement):
-    a session extends while consecutive turns are ≤ gap apart; the
-    session window spans [min ts, max ts + gap)."""
+def session_counts(turns: DataFrame, gap: str) -> DataFrame:
+    """Turn-gap sessions per conv_id: a session extends while
+    consecutive turns are ≤ gap apart and spans [min ts, max ts + gap).
+    ``sess_start, sess_end, conv_id, n_turns, first_turn, last_turn``;
+    the grouping order is the append stream's state-store key schema,
+    as in :func:`window_counts`."""
     return (
-        turns.groupBy(F.session_window("ts", gap).alias("win"), "conv_id")
+        turns.groupBy(F.session_window("ts", gap).alias("sw"), "conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.min("turn_idx").alias("first_turn"),
             F.max("turn_idx").alias("last_turn"),
         )
         .select(
-            F.unix_millis(F.col("win.start")).alias("sess_start_ms"),
-            F.unix_millis(F.col("win.end")).alias("sess_end_ms"),
+            F.col("sw.start").alias("sess_start"),
+            F.col("sw.end").alias("sess_end"),
             "conv_id",
             "n_turns",
             "first_turn",
             "last_turn",
         )
+    )
+
+
+def sliding_counts(
+    turns: DataFrame, size: str = "10 minutes", slide: str = "5 minutes"
+) -> DataFrame:
+    """Per-conv sliding window counts (each row lands in size/slide
+    windows), window start as epoch millis."""
+    return window_counts(turns, size, slide).select(
+        F.unix_millis("win_start").alias("win_start_ms"), "conv_id", "n_turns"
+    )
+
+
+def session_windows(
+    turns: DataFrame, gap: str = "30 minutes"
+) -> DataFrame:
+    """Turn-gap sessionization per conv_id (north-rule requirement),
+    session bounds as epoch millis."""
+    return session_counts(turns, gap).select(
+        F.unix_millis("sess_start").alias("sess_start_ms"),
+        F.unix_millis("sess_end").alias("sess_end_ms"),
+        "conv_id",
+        "n_turns",
+        "first_turn",
+        "last_turn",
     )
 
 

@@ -1,20 +1,22 @@
 """Continuously-maintained cohorts (streaming form of reference job 3).
 
 The reference evaluates cohort rules as one-shot pull queries against
-the sink table (`UserGroupClickHouseJob.java:83-96`). Here the rule's
-aggregates (SUM/COUNT/MAX of the turn metric per conv_id) are
-maintained INCREMENTALLY by a Structured Streaming update-mode
-aggregation over the derived event stream: each micro-batch emits only
-the conversations whose stats changed; foreachBatch appends them with
-the epoch id, forming a stats changelog whose last-writer-wins
-materialization is the current cohort-stats table. Membership is then a
-filter (the HAVING conjuncts) over current stats — re-evaluated at any
-time without rescanning history.
+the sink table (`UserGroupClickHouseJob.java:83-96`). Here one
+Structured Streaming update-mode aggregation maintains the
+rule-INDEPENDENT cube (`cohort.events_cube`: SUM/COUNT/MAX of the turn
+metric per (conv_id, event_kind, day)) over the derived event stream;
+foreachBatch writes each micro-batch's changed cells with the epoch id,
+forming a cube changelog whose last-writer-wins materialization is the
+current cube. Any rule set — exist or not-exist, any HAVING — is then
+evaluated on the cube per micro-batch (:func:`run_dynamic_cohorts`),
+exactly: the kind filter and the start-of-day cutoff select whole cube
+cells, and the three dimensions re-aggregate algebraically.
 
-Scale: streaming state = one row of 3 numbers per conv_id (bounded by
-|conversations|, not turns); the changelog materialization reuses the
-same LWW shape as the CDC apply. At 10^12 turns this is THE way to keep
-cohorts fresh — the reference's pull query would rescan the sink table.
+Scale: streaming state = one row of 3 numbers per (conv_id, kind,
+active day) — bounded by conversations × days, not turns; the changelog
+materialization reuses the same LWW shape as the CDC apply. At 10^12
+turns this is THE way to keep cohorts fresh — the reference's pull
+query would rescan the sink table.
 """
 
 from __future__ import annotations
@@ -26,82 +28,6 @@ from pyspark.sql import functions as F
 
 from ..operators import cdc, cohort
 from .pipeline import envelope_stream, run_available_now
-
-
-def cohort_stats_stream(
-    spark: SparkSession,
-    spool_dir: str,
-    rule: cohort.CohortRule,
-    now: str,
-    workdir: str,
-) -> str:
-    """Run the incremental stats aggregation over the envelope spool.
-
-    Returns the stats-changelog directory (parquet, one file set per
-    epoch with an ``_epoch`` column).
-    """
-    delta_dir = os.path.join(workdir, "stats_delta")
-    ckpt = os.path.join(workdir, "ck")
-
-    env = envelope_stream(spark, spool_dir)
-    events = cdc.derive_turn_events(env)
-    df = events
-    kind = cohort.TARGET_TO_KIND.get(rule.target)
-    if kind is not None:  # unmapped-target quirk: no filter
-        df = df.where(F.col("event_kind") == kind)
-    df = df.where(F.col("ts") >= cohort.cutoff_expr(now, rule.value_days))
-
-    stats = df.groupBy("conv_id").agg(
-        F.sum("metric").alias("sum_metric"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.max("metric").alias("max_metric"),
-    )
-
-    def _append(batch: DataFrame, epoch_id: int) -> None:
-        batch.withColumn("_epoch", F.lit(int(epoch_id))).write.mode(
-            "append"
-        ).parquet(delta_dir)
-
-    run_available_now(
-        stats.writeStream.outputMode("update").foreachBatch(_append), ckpt
-    )
-    return delta_dir
-
-
-def current_stats(spark: SparkSession, delta_dir: str) -> DataFrame:
-    """LWW-materialize the stats changelog: last emission per conv_id."""
-    delta = spark.read.parquet(delta_dir)
-    return (
-        delta.groupBy("conv_id")
-        .agg(
-            F.max_by(
-                F.struct("sum_metric", "cnt", "max_metric"), F.col("_epoch")
-            ).alias("w")
-        )
-        .select("conv_id", "w.*")
-    )
-
-
-def cohort_members(
-    spark: SparkSession, delta_dir: str, rule: cohort.CohortRule
-) -> DataFrame:
-    """HAVING-filter the current stats → cohort conv_ids."""
-    stats = current_stats(spark, delta_dir)
-    if not rule.sub_params:
-        return stats.select("conv_id")
-    # the maintained stats columns ARE the cube partials — derive the
-    # dimension → column map from the one registry (cohort.DIMENSIONS)
-    col_for_dim = {
-        d: F.col(partial) for d, (_, _, partial) in cohort.DIMENSIONS.items()
-    }
-    cond = None
-    for sp in rule.sub_params:
-        c = cohort._OPS[sp.operator](col_for_dim[sp.dimension], F.lit(sp.value))
-        cond = c if cond is None else (cond & c)
-    return stats.where(cond).select("conv_id")
-
-
-# --- dynamic rules over a rule-independent cube (broadcast-state analog)
 
 
 def load_rules(path: str) -> dict[int, cohort.CohortRule]:

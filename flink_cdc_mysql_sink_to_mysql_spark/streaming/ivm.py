@@ -15,7 +15,9 @@ Design (the exactly-once shape that needs NO retraction arithmetic):
 2. the batch's touched conversations are recomputed FROM the
    post-merge state (``MergeParquetSink.live_rows``: a bucket-pruned
    read — work ∝ batch footprint, not table size), producing each
-   touched conv's complete, correct window rows;
+   touched conv's complete, correct window rows with the same count
+   body the batch queries and append streams run
+   (``windows.window_counts`` / ``windows.session_counts``);
 3. a grouped-replace commit swaps those convs' rows in the window
    table (delete-all-rows-of-key ∪ insert-recomputed). It commits
    through the state sink's own commit protocol
@@ -45,6 +47,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.windows import session_counts, window_counts
 from .sink import MergeParquetSink, bucket_of
 
 
@@ -75,33 +78,31 @@ class GroupedReplaceParquetSink(MergeParquetSink):
         """Atomically replace ALL rows of the keys in ``keys`` (a
         ``conv_id`` column) with ``rows`` (the view's row type without
         ``bucket``; rows only for those keys — a key with no rows is a
-        full delete), as epoch ``epoch_id`` through the same commit
-        protocol as :meth:`merge_changelog`. Returns the lineage record
-        {epoch, buckets, wall_s}, or {epoch, skipped: True} for an
-        already-committed epoch."""
+        full delete; ``keys`` may repeat a key), as epoch ``epoch_id``
+        through the same commit protocol as :meth:`merge_changelog`.
+        Returns the lineage record {epoch, buckets, wall_s}, or
+        {epoch, skipped: True} for an already-committed epoch."""
         spark = rows.sparkSession
 
         @contextmanager
         def build(manifest):
             bucket = bucket_of(self.n_buckets)
-            keyset = keys.select("conv_id").distinct().cache()
-            try:
-                # touched buckets come from the KEYS (a key whose
-                # recompute is empty still purges its old rows)
-                touched = sorted(
-                    r["b"]
-                    for r in keyset.select(bucket.alias("b")).distinct().collect()
-                )
-                current = self._read_buckets(spark, manifest, touched)
-                out = current.join(
-                    F.broadcast(keyset), "conv_id", "left_anti"
-                ).unionByName(rows.withColumn("bucket", bucket))
-                yield out, touched, lambda _version, _written: {
-                    "epoch": int(epoch_id),
-                    "buckets": touched,
-                }
-            finally:
-                keyset.unpersist()
+            # duplicate keys are harmless: the bucket list is distinct
+            # and the anti-join only tests membership
+            keyset = keys.select("conv_id")
+            # touched buckets come from the KEYS (a key whose recompute
+            # is empty still purges its old rows)
+            touched = sorted(
+                r["b"] for r in keyset.select(bucket.alias("b")).distinct().collect()
+            )
+            current = self._read_buckets(spark, manifest, touched)
+            out = current.join(
+                F.broadcast(keyset), "conv_id", "left_anti"
+            ).unionByName(rows.withColumn("bucket", bucket))
+            yield out, touched, lambda _version, _written: {
+                "epoch": int(epoch_id),
+                "buckets": touched,
+            }
 
         return self._commit(spark, epoch_id, str(epoch_id), build)
 
@@ -116,23 +117,7 @@ def windowed_state_batch(envelopes: DataFrame, window: str = "10 minutes") -> Da
     after the stream drains, whatever the update/delete interleaving."""
     from ..operators.cdc import apply_changelog
 
-    return _window_rows(apply_changelog(envelopes), window)
-
-
-def _window_rows(live: DataFrame, window: str, slide: str | None = None) -> DataFrame:
-    # with slide, F.window(ts, W, S) multi-assigns each turn to its W/S
-    # covering windows — the recompute stays one hash agg per touched conv
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        live.groupBy("conv_id", win.alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            "conv_id",
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "n_turns",
-        )
-    )
+    return window_counts(apply_changelog(envelopes), window)
 
 
 def sliding_state_batch(
@@ -143,26 +128,7 @@ def sliding_state_batch(
     """Batch twin / oracle for :func:`sliding_state_stream`."""
     from ..operators.cdc import apply_changelog
 
-    return _window_rows(apply_changelog(envelopes), window, slide)
-
-
-def _session_rows(live: DataFrame, gap: str) -> DataFrame:
-    return (
-        live.groupBy("conv_id", F.session_window("ts", gap).alias("sw"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            "conv_id",
-            F.col("sw.start").alias("sess_start"),
-            F.col("sw.end").alias("sess_end"),
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
-    )
+    return window_counts(apply_changelog(envelopes), window, slide)
 
 
 SESSION_VIEW_DDL = (
@@ -235,7 +201,7 @@ def windowed_state_stream(
         state_sink,
         window_sink,
         checkpoint_dir,
-        recompute=lambda live: _window_rows(live, window),
+        recompute=lambda live: window_counts(live, window),
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -261,7 +227,7 @@ def sliding_state_stream(
         state_sink,
         window_sink,
         checkpoint_dir,
-        recompute=lambda live: _window_rows(live, window, slide),
+        recompute=lambda live: window_counts(live, window, slide),
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -291,7 +257,7 @@ def session_state_stream(
         state_sink,
         session_sink,
         checkpoint_dir,
-        recompute=lambda live: _session_rows(live, gap),
+        recompute=lambda live: session_counts(live, gap),
         max_files_per_trigger=max_files_per_trigger,
     )
 
@@ -300,4 +266,4 @@ def sessions_state_batch(envelopes: DataFrame, gap: str = "30 minutes") -> DataF
     """Batch twin / oracle for :func:`session_state_stream`."""
     from ..operators.cdc import apply_changelog
 
-    return _session_rows(apply_changelog(envelopes), gap)
+    return session_counts(apply_changelog(envelopes), gap)

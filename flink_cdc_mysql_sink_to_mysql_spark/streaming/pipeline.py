@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ..operators.joins import pair_responses, response_sides
+from ..operators.windows import session_counts, window_counts
+
+
 def image_ddl(extra_image_fields: dict[str, str] | None = None) -> str:
     """The per-image struct DDL (``struct<...>``), optionally widened
     with evolved columns — single source for every reader that needs
@@ -550,6 +554,18 @@ def replay_dlq(spark: SparkSession, dlq_dir: str, sink, parse_fn=None) -> dict:
     return out
 
 
+def _stream_turns(env: DataFrame) -> DataFrame:
+    """The turn rows (conv_id, turn_idx, role, ts) of an envelope
+    stream's after-images — the input the append-mode windowed, session
+    and join streams share."""
+    return env.where(F.col("after").isNotNull()).select(
+        F.col("after.conv_id").alias("conv_id"),
+        F.col("after.turn_idx").alias("turn_idx"),
+        F.col("after.role").alias("role"),
+        F.col("after.ts").alias("ts"),
+    )
+
+
 def windowed_counts_stream(
     spark: SparkSession,
     spool_dir: str,
@@ -562,30 +578,14 @@ def windowed_counts_stream(
     """Event-time tumbling (or, with ``slide``, sliding) counts per
     conv_id with a real watermark — late rows beyond the delay are
     dropped by the state store (the north-rule late-data semantics; the
-    reference has none, SURVEY §2.8).
+    reference has none, SURVEY §2.8). The batch count body
+    (``windows.window_counts``) over watermarked input.
 
     Append-mode parquet output: a window only emits once its watermark
     passes — restart-safe via the checkpoint.
     """
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.ts").alias("ts"),
-    )
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
-    agg = (
-        turns.withWatermark("ts", watermark_delay)
-        .groupBy(win.alias("win"), "conv_id")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "conv_id",
-            "n_turns",
-        )
-    )
+    turns = _stream_turns(envelope_stream(spark, spool_dir))
+    agg = window_counts(turns.withWatermark("ts", watermark_delay), window, slide)
     run_available_now(
         agg.writeStream.format("parquet")
         .option("path", out_dir)
@@ -610,47 +610,17 @@ def stream_stream_join(
     Both sides carry watermarks, and the join's time-range predicate
     (a.ts in (u.ts, u.ts + max_delay]) lets the state store evict a
     user turn once the response-side watermark passes u.ts + max_delay —
-    bounded state per conv_id regardless of stream length. Same plan as
-    the batch form (operators/joins.py) so results are oracle-checkable.
+    bounded state per conv_id regardless of stream length. The sides
+    and the pair step are the batch form's (operators/joins.py), so
+    results are oracle-checkable. Each side gets its own watermark
+    after the role split: one watermark above the split would be a
+    single global watermark over both roles.
     """
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.turn_idx").alias("turn_idx"),
-        F.col("after.role").alias("role"),
-        F.col("after.ts").alias("ts"),
-    )
-    u = (
-        turns.where(F.col("role") == "user")
-        .select(
-            F.col("conv_id").alias("u_conv"),
-            F.col("turn_idx").alias("u_idx"),
-            F.col("ts").alias("u_ts"),
-        )
-        .withWatermark("u_ts", watermark_delay)
-    )
-    a = (
-        turns.where(F.col("role").isin("assistant", "tool"))
-        .select(
-            F.col("conv_id").alias("a_conv"),
-            F.col("turn_idx").alias("a_idx"),
-            F.col("role").alias("a_role"),
-            F.col("ts").alias("a_ts"),
-        )
-        .withWatermark("a_ts", watermark_delay)
-    )
-    joined = u.join(
-        a,
-        (u["u_conv"] == a["a_conv"])
-        & (a["a_ts"] > u["u_ts"])
-        & (a["a_ts"] <= u["u_ts"] + F.expr(max_delay)),
-        "inner",
-    ).select(
-        F.col("u_conv").alias("conv_id"),
-        "u_idx",
-        "a_idx",
-        "a_role",
-        (F.unix_millis("a_ts") - F.unix_millis("u_ts")).alias("latency_ms"),
+    u, a = response_sides(_stream_turns(envelope_stream(spark, spool_dir)))
+    joined = pair_responses(
+        u.withWatermark("u_ts", watermark_delay),
+        a.withWatermark("a_ts", watermark_delay),
+        max_delay,
     )
     run_available_now(
         joined.writeStream.format("parquet")
@@ -673,30 +643,10 @@ def session_windows_stream(
     per conv_id with a watermark — a session closes (and emits, append
     mode) once the watermark passes its end; late turns within the delay
     re-open/merge sessions, later ones are dropped (north-rule
-    semantics; SURVEY §7 'session windows + upsert interplay')."""
-    env = envelope_stream(spark, spool_dir)
-    turns = env.where(F.col("after").isNotNull()).select(
-        F.col("after.conv_id").alias("conv_id"),
-        F.col("after.turn_idx").alias("turn_idx"),
-        F.col("after.ts").alias("ts"),
-    )
-    agg = (
-        turns.withWatermark("ts", watermark_delay)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            F.col("sw.start").alias("sess_start"),
-            F.col("sw.end").alias("sess_end"),
-            "conv_id",
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
-    )
+    semantics; SURVEY §7 'session windows + upsert interplay'). The
+    batch body (``windows.session_counts``) over watermarked input."""
+    turns = _stream_turns(envelope_stream(spark, spool_dir))
+    agg = session_counts(turns.withWatermark("ts", watermark_delay), gap)
     run_available_now(
         agg.writeStream.format("parquet")
         .option("path", out_dir)
@@ -730,24 +680,14 @@ def spool_changelog(
     order — a deterministic replayable 'binlog' the stream consumes.
     Chunks split by seq range so arrival order ≈ change order (the
     reference's binlog-order delivery, parallelism-1 analog)."""
-    import glob
-    import shutil
-
-    os.makedirs(spool_dir, exist_ok=True)
     df = envelopes.withColumn(
         "_chunk", F.ntile(n_chunks).over(Window.orderBy(order_by))
     )
-    paths = []
-    for i in range(1, n_chunks + 1):
-        tmp = os.path.join(spool_dir, f"_tmp-{i:03d}")
-        df.where(F.col("_chunk") == i).drop("_chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        # the file source doesn't recurse — promote the single part file
-        # to a flat chunk file (spool append = atomic rename)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        p = os.path.join(spool_dir, f"chunk-{i:03d}.parquet")
-        os.replace(part, p)
-        shutil.rmtree(tmp)
-        paths.append(p)
-    return paths
+    return [
+        spool_dataframe(
+            df.where(F.col("_chunk") == i).drop("_chunk"),
+            spool_dir,
+            f"chunk-{i:03d}.parquet",
+        )
+        for i in range(1, n_chunks + 1)
+    ]

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.windows import session_counts
+
 PROGRESS_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -508,17 +510,16 @@ def abandoned_conversations_batch(envelopes: DataFrame) -> DataFrame:
     passed is one abandoned burst."""
     turns = envelopes.where(F.col("after").isNotNull()).select(
         F.col("after.conv_id").alias("conv_id"),
+        F.col("after.turn_idx").alias("turn_idx"),
         F.col("after.ts").alias("ts"),
-        F.unix_millis(F.col("after.ts")).alias("ts_ms"),
     )
-    gap_s = ABANDON_GAP_MS // 1000
-    sessions = turns.groupBy(
-        "conv_id", F.session_window("ts", f"{gap_s} seconds").alias("sw")
-    ).agg(
-        F.max("ts_ms").alias("last_ts_ms"),
-        F.count(F.lit(1)).cast("int").alias("n_turns"),
+    # a session ends last_ts + gap (whole ms), so this is max(ts_ms)
+    sessions = session_counts(turns, f"{ABANDON_GAP_MS // 1000} seconds").select(
+        "conv_id",
+        (F.unix_millis("sess_end") - F.lit(ABANDON_GAP_MS)).alias("last_ts_ms"),
+        F.col("n_turns").cast("int").alias("n_turns"),
     )
-    final_wm = turns.agg(F.max("ts_ms").alias("_wm"))
+    final_wm = turns.agg(F.max(F.unix_millis("ts")).alias("_wm"))
     return (
         sessions.join(F.broadcast(final_wm))
         .where(F.col("last_ts_ms") + F.lit(ABANDON_GAP_MS) <= F.col("_wm"))

@@ -149,12 +149,13 @@ def main() -> None:
         "workdir": args.workdir,
     }
     if args.check:
+        got = view_sink.read_view(spark)
         twin = {
             "tumbling": ivm.windowed_state_batch,
             "sliding": ivm.sliding_state_batch,
             "session": ivm.sessions_state_batch,
         }[args.view](spark.read.parquet(os.path.join(spool, "*.parquet")))
-        got = view_sink.read_view(spark)
+        twin = twin.select(*got.columns)  # exceptAll is positional
         missing = twin.exceptAll(got).count()
         extra = got.exceptAll(twin).count()
         out["check"] = {"missing": missing, "extra": extra}

@@ -33,6 +33,17 @@ def test_query_matches_oracle(spark, duck_correct, name):
     assert_same(sdf, ddf, name)
 
 
+def test_oracles_emit_no_hugeint(duck_correct):
+    """No oracle may return a HUGEINT column: DuckDB widens SUM over
+    BIGINT to HUGEINT, Spark keeps BIGINT, and the driver's hash is
+    dtype-exact — such an oracle can never match (cast it to BIGINT)."""
+    bad = []
+    for name, sql in sorted(entry.oracle_sql().items()):
+        rel = duck_correct.sql(sql)
+        bad += [(name, c) for c, t in zip(rel.columns, rel.types) if str(t) == "HUGEINT"]
+    assert not bad, bad
+
+
 def test_entry_smoke(spark):
     df = entry.entry(spark)
     assert df.count() > 0

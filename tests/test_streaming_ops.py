@@ -280,58 +280,70 @@ def test_sliding_windows_stream_matches_batch(spark, tmp_path, spool):
 
 
 def test_incremental_cohort_matches_batch(spark, tmp_path, spool):
-    """Continuously-maintained cohort (update-mode stats + changelog
-    materialization) equals the one-shot batch cohort after drain."""
+    """Continuously-maintained cohort (update-mode cube + per-epoch rule
+    evaluation) equals the one-shot batch cohort after drain — for the
+    exist rule and its not-exist twin, both served by one stream from
+    the rule-independent cube."""
     from flink_cdc_mysql_sink_to_mysql_spark.operators import cdc, cohort
     from flink_cdc_mysql_sink_to_mysql_spark.streaming import cohort_stream
+    from tests.test_dynamic_cohorts import _write_rules
 
     now = "2024-01-30 00:00:00"
-    rule = cohort.CohortRule(
-        target=1,
-        is_exist=True,
-        value_days=14,
-        sub_params=(
-            cohort.SubParam(2, 2, 2),
-            cohort.SubParam(1, 0, 100),
-            cohort.SubParam(3, 3, 5000),
-        ),
+    rules = [
+        cohort.CohortRule(
+            target=1,
+            is_exist=is_exist,
+            value_days=14,
+            sub_params=(
+                cohort.SubParam(2, 2, 2),
+                cohort.SubParam(1, 0, 100),
+                cohort.SubParam(3, 3, 5000),
+            ),
+        )
+        for is_exist in (True, False)
+    ]
+    _write_rules(tmp_path / "rules.json", rules)
+    wd = str(tmp_path / "coh")
+    cohort_stream.run_dynamic_cohorts(
+        spark, spool, str(tmp_path / "rules.json"), wd, now
     )
-    delta = cohort_stream.cohort_stats_stream(
-        spark, spool, rule, now, str(tmp_path / "coh")
-    )
-    got = {
-        r.conv_id
-        for r in cohort_stream.cohort_members(spark, delta, rule).collect()
-    }
-    env = mysql_changelog(spark, SF)
-    want = {
-        r.conv_id
-        for r in cohort.exist_conv_ids(
-            cdc.derive_turn_events(env), rule, now
-        ).collect()
-    }
-    assert got == want and len(got) > 0
+    members = cohort_stream.read_members(spark, wd)
+    events = cdc.derive_turn_events(mysql_changelog(spark, SF))
+    universe = events.select("conv_id").distinct()
+    for rule_id, rule in enumerate(rules):
+        got = {
+            r.conv_id
+            for r in members.where(F.col("rule_id") == rule_id).collect()
+        }
+        want = {
+            r.conv_id
+            for r in cohort.evaluate_rule(universe, events, rule, now).collect()
+        }
+        assert got == want and len(got) > 0, rule
 
 
 def test_incremental_cohort_resumes_from_checkpoint(spark, tmp_path, spool):
-    """Re-running the cohort stats stream with the same checkpoint and
-    no new spool data processes nothing (no duplicate deltas); appending
-    a new chunk updates only affected conversations."""
+    """Re-running the cohort stream with the same checkpoint and no new
+    spool data processes nothing (no duplicate cube deltas) and keeps
+    serving the members."""
     from flink_cdc_mysql_sink_to_mysql_spark.operators import cohort
     from flink_cdc_mysql_sink_to_mysql_spark.streaming import cohort_stream
+    from tests.test_dynamic_cohorts import _write_rules
 
     now = "2024-01-30 00:00:00"
     rule = cohort.CohortRule(target=1, is_exist=True, value_days=14)
+    rules_path = tmp_path / "rules.json"
+    _write_rules(rules_path, [rule])
     wd = str(tmp_path / "coh")
-    delta = cohort_stream.cohort_stats_stream(spark, spool, rule, now, wd)
+    delta = cohort_stream.cube_delta_dir(wd)
+    cohort_stream.run_dynamic_cohorts(spark, spool, str(rules_path), wd, now)
     n1 = spark.read.parquet(delta).count()
     # resume with nothing new → zero new delta rows
-    cohort_stream.cohort_stats_stream(spark, spool, rule, now, wd)
+    cohort_stream.run_dynamic_cohorts(spark, spool, str(rules_path), wd, now)
     n2 = spark.read.parquet(delta).count()
     assert n2 == n1
     members_before = {
-        r.conv_id
-        for r in cohort_stream.cohort_members(spark, delta, rule).collect()
+        r.conv_id for r in cohort_stream.read_members(spark, wd).collect()
     }
     assert len(members_before) > 0
 
